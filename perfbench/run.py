@@ -1,6 +1,6 @@
 """Benchmark entry point: one workload, one seed, one run.
 
-    python3 perfbench/run.py --workload cdc_replicate --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload cdc_replicate --seed 1 --seconds 16 --trace 0
 
 Run from the repository root. The run builds its inputs from ``--seed``
 (perfbench/gen.py), sets up the workload ``SETUP_REPS`` times (each a
@@ -126,6 +126,26 @@ class Report:
         return self._sum(self.jobs, ids)
 
 
+def host_cpu_ticks() -> list[int]:
+    """The aggregate ``cpu`` line of /proc/stat (user nice system idle
+    iowait irq softirq steal ...), or [] where there is none."""
+    try:
+        with open("/proc/stat") as f:
+            return [int(x) for x in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return []
+
+
+def host_cpu_shares(t0: list[int], t1: list[int]) -> dict:
+    """Shares of busy, idle and steal time between two /proc/stat reads;
+    steal is time the hypervisor gave the vCPUs to someone else."""
+    if len(t0) < 8 or len(t1) < 8:
+        return {}
+    d = [b - a for a, b in zip(t0, t1)]
+    total = sum(d[:8]) or 1
+    return {"busy": (sum(d[:3]) + d[5] + d[6]) / total, "idle": (d[3] + d[4]) / total, "steal": d[7] / total}
+
+
 def workload_class(name):
     if name == "cdc_replicate":
         from wl_cdc import CdcReplicate
@@ -228,6 +248,7 @@ def main(argv=None) -> int:
             tracer.enabled = True
             wl.wrap(tracer)
         steps = 0
+        cpu0 = host_cpu_ticks()
         loop_t0 = time.perf_counter()
         while time.perf_counter() - loop_t0 < args.seconds or steps < wl.min_steps:
             failed_before = ctx.failed
@@ -239,6 +260,7 @@ def main(argv=None) -> int:
                 break
             steps += 1
         loop_wall = time.perf_counter() - loop_t0
+        cpu1 = host_cpu_ticks()
         tracer.enabled = False
         tracer.unwrap()
         failed_before = ctx.failed
@@ -253,6 +275,7 @@ def main(argv=None) -> int:
             "workload": args.workload, "seed": args.seed, "scale": args.scale,
             "seconds": args.seconds, "trace": args.trace,
             "steps": steps, "loop_wall_s": loop_wall, "warmup_s": warmup_s,
+            "loop_host_cpu": host_cpu_shares(cpu0, cpu1),
             "setup_samples_s": setups,
             "peak_rss_mb": rss_mb,
             **wl.detail(),

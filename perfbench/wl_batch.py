@@ -1,12 +1,12 @@
 """batch_analytics — read-only batch work: registered queries, corpus
 operators and one fused curation pipeline.
 
-One pass runs every row of ``RELATIONAL`` and ``CORPUS`` through
+One step runs every row of ``RELATIONAL`` and ``CORPUS`` through
 ``queries.QUERIES[name](spark, sf_dir).collect()`` (plan + execute +
 drain), then one ``run_pipeline(count_stages=False)`` over a documents
-corpus with planted rejects, drained by a collect, twice, then every
-row again. Passes repeat until the run's time is up; each row and the
-curation report the median of their executions.
+corpus with planted rejects, drained by a collect. Steps repeat until
+the run's time is up, at least twice; each row and the curation report
+the median of their executions.
 Nothing here touches the state store or the streaming code, so this is
 the bypass workload for changes there.
 """
@@ -47,7 +47,7 @@ CURATION_SPEC = [
 
 class BatchAnalytics:
     name = "batch_analytics"
-    min_steps = 1
+    min_steps = 2
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -123,22 +123,28 @@ class BatchAnalytics:
         op.check(fp == self.curate_fp, f"curated output {fp} differs from the first run {self.curate_fp}")
 
     def warmup(self) -> None:
+        t0 = time.perf_counter()
         self._curate(timed=False)
-        for name in RELATIONAL + CORPUS:
-            self._row(name, timed=False)
+        self.warm_s = {"curate": [time.perf_counter() - t0]}
+        # two sweeps: after a single one the first measured sweep still
+        # ran 30-40% slower than the second
+        for _ in range(2):
+            for name in RELATIONAL + CORPUS:
+                t0 = time.perf_counter()
+                self._row(name, timed=False)
+                self.warm_s.setdefault(name, []).append(time.perf_counter() - t0)
 
     def step(self) -> bool:
-        """One pass: every query row, the curation twice, every row
-        again. A single ~11 s curation sample moved by ~20% from run to
-        run; two interleaved samples per row as bench.py interleaves its
-        rounds, so one burst of host noise does not hit both."""
-        with self.ctx.tracer.span("bench.pass"):
+        """Every query row, then one curation. A single ~10 s curation
+        sample moved by ~20% from run to run, so a run takes at least two
+        steps: two samples of everything, interleaved as bench.py
+        interleaves its rounds, so one burst of host noise does not hit
+        both. Steps this size let the loop stop within ~12 s of the
+        run's time."""
+        with self.ctx.tracer.span("bench.step"):
             for name in RELATIONAL + CORPUS:
                 self._row(name, timed=True)
-            for _ in range(2):
-                self._curate(timed=True)
-            for name in RELATIONAL + CORPUS:
-                self._row(name, timed=True)
+            self._curate(timed=True)
         return True
 
     def finish(self) -> None:
@@ -178,9 +184,10 @@ class BatchAnalytics:
             "corpus_ops_geomean_s": geomean(self._medians(CORPUS)),
             "curate_docs_per_s": self.cur.table.num_rows / median(self.curate_s) if self.curate_s else 0.0,
             "curate_p50_s": median(self.curate_s),
-            "passes": len(self.curate_s),
+            "curations": len(self.curate_s),
             "row_samples_s": self.times,
             "curate_samples_s": self.curate_s,
+            "warmup_samples_s": self.warm_s,
             "tables": self.tables,
             "curation": {
                 "docs_in": self.cur.table.num_rows,

@@ -60,14 +60,15 @@ def dir_rows_bytes(path: str) -> tuple[int, int]:
 
 class CdcReplicate:
     name = "cdc_replicate"
-    # a fixed floor of four cycles, so every run's median comes from the
-    # same number of samples
+    # a floor of four cycles, so a run on a slow host still reports a
+    # median of several samples
     min_steps = 4
 
     def __init__(self, ctx):
         self.ctx = ctx
         self.size = SIZES[ctx.scale]
         self.cycle_s, self.state_s, self.view_s, self.maint_s = [], [], [], []
+        self.warm_s = []
         self.captured = []
         self.fold_bytes, self.changed_keys = 0, 0
 
@@ -78,7 +79,7 @@ class CdcReplicate:
 
         rng = self.ctx.rng("cdc")
         self.events = gen.events_table(rng, self.size["rows"], self.size["users"])
-        self.waves = gen.wave_cuts(rng, self.events, self.size["wave_hours"], jitter=0.1)
+        self.waves = gen.wave_cuts(rng, self.events, self.size["wave_hours"], jitter=0.02)
         self.src = os.path.join(rep_dir, "source")
         os.makedirs(self.src)
         self.next_wave = 0
@@ -131,7 +132,9 @@ class CdcReplicate:
             op.check(res.get(TABLE) is not None, f"cycle failed: {res}")
             op.check(got == self.wave_rows, f"captured {got} rows, wave landed {self.wave_rows}")
         self._account_fold()
-        if timed:
+        if not timed:
+            self.warm_s.append(dt)
+        else:
             self.cycle_s.append(dt)
             self.captured.append(got)
             self._read()
@@ -210,6 +213,7 @@ class CdcReplicate:
             "view_read_p50_s": median(self.view_s),
             "maintain_p50_s": median(self.maint_s),
             "cycle_samples_s": self.cycle_s,
+            "warmup_cycle_samples_s": self.warm_s,
             "rows_per_wave_p50": median(self.captured),
             "keys": self.size["users"],
             "versions_per_key": self.size["rows"] / self.size["users"],
